@@ -565,6 +565,17 @@ def main() -> None:
         V1M_N, V1M_DIM, V1M_NLIST = 1_000_000, 64, 2048
         V1M_NC, V1M_NBULK = 1024, 20_000
 
+    def corpus_max_share(name: str) -> float:
+        """Largest cluster over the even share of the factory nlist, read
+        from the index's current histogram.  rebalance() reports the same
+        ratio but may split clusters first, which would change the layout
+        the timed legs then search."""
+        idx = eng.registry.get(name)
+        counts = idx.cluster_counts
+        if counts is None:  # read-only recount
+            counts = [r["count"] for r in idx.data.groupBy("cluster_id").count().collect()]
+        return round(max(counts) * idx.spec.nlist / sum(counts), 2)
+
     def _v1m_jit_warmup(synth_clusterable):
         """Minimal JIT warmup (VERDICT r12 task 3): a 32k-row replica of
         every kernel the timed legs exercise — running the section first
@@ -650,11 +661,9 @@ def main() -> None:
             eng.add("bench_v1m", corp)
 
         timed_build("vec1m_build_sec", _build_ivf)
-        # corpus-histogram skew receipt: a measurement-only rebalance pass
-        # (the build already enforced the cap; this records the ratio)
-        queries["vec1m_corpus_max_share"] = eng.rebalance("bench_v1m")[
-            "max_share"
-        ]
+        # corpus-histogram skew receipt (the build already enforced the cap;
+        # this records the ratio without touching the layout)
+        queries["vec1m_corpus_max_share"] = corpus_max_share("bench_v1m")
         timed_build(
             "vec1m_warm_sec",
             lambda: (eng.warm("bench_v1m"), eng.warm("bench_v1m_flat")),
@@ -849,9 +858,7 @@ def main() -> None:
             spark, V1M_NBULK, V1M_DIM, n_clusters=V1M_NC, lo=V1M_N + 256,
             id_col="qid",
         )
-        queries["vec1m_corpus_max_share"] = eng.rebalance("bench_v1m")[
-            "max_share"
-        ]
+        queries["vec1m_corpus_max_share"] = corpus_max_share("bench_v1m")
         waited, load_g = quiet_wait(max_sec=300.0, target=5.0)
         queries["bulk_gate_wait_sec"] = round(waited, 1)
         queries["bulk_gate_load"] = round(load_g, 2)

@@ -22,6 +22,7 @@ from duckdb_faiss_ext_spark.errors import (
     IndexAlreadyExists,
     IndexNotFound,
     InvalidMetric,
+    InvalidVector,
     LabelModeMismatch,
     TrainingError,
 )
@@ -34,6 +35,7 @@ __all__ = [
     "IndexNotFound",
     "IndexAlreadyExists",
     "InvalidMetric",
+    "InvalidVector",
     "ImmutableIndex",
     "LabelModeMismatch",
     "TrainingError",

@@ -23,17 +23,19 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
+import tempfile
 import threading
+import warnings
 from contextlib import contextmanager
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_faiss_ext_spark.errors import (
-    DimensionMismatch,
     FaissSparkError,
     ImmutableIndex,
     LabelModeMismatch,
@@ -41,7 +43,13 @@ from duckdb_faiss_ext_spark.errors import (
     TrainingError,
 )
 from duckdb_faiss_ext_spark.factory import parse_factory
-from duckdb_faiss_ext_spark.metrics import pairwise, resolve_metric, topk_indices
+from duckdb_faiss_ext_spark.metrics import (
+    is_descending,
+    pairwise,
+    resolve_metric,
+    topk_indices,
+)
+from duckdb_faiss_ext_spark import vectors
 from duckdb_faiss_ext_spark.operators import topk as topk_ops
 from duckdb_faiss_ext_spark.registry import (
     LABEL_FALSE,
@@ -201,14 +209,16 @@ class FaissSparkEngine:
             raise LabelModeMismatch(idx.name, labeled)
 
     def _validate_dim(self, idx: FaissIndex, df: DataFrame) -> None:
+        """Add-time check of every row: dimension, null row, null element
+        and NaN/±Inf (vectors.invalid_code), one bounded scan."""
         bad = (
-            df.select(F.size("vector").alias("n"))
-            .filter(F.col("n") != idx.dim)
+            df.select(vectors.invalid_code(F.col("vector"), idx.dim).alias("bad"))
+            .filter(F.col("bad").isNotNull())
             .limit(1)
             .collect()
         )
         if bad:
-            raise DimensionMismatch(idx.dim, bad[0]["n"])
+            vectors.raise_invalid(bad[0]["bad"], idx.dim)
 
     # above this partition count the per-partition offsets go through a
     # broadcast join instead of a literal map expression (a 100k-entry
@@ -237,28 +247,24 @@ class FaissSparkEngine:
 
         Returns (labeled_df, batch_row_count) — the count falls out of the
         offsets job for free, so the caller can skip its own count pass.
-        ``validate_dim``, if given, folds the dimension check into the SAME
-        scan (a bad-dim aggregate per partition) — the separate validate
-        pass was the residual 0.8x of the unlabeled ingest path."""
+        ``validate_dim``, if given, folds the add-time row check
+        (vectors.invalid_code) into the SAME scan as a per-partition
+        aggregate — the separate validate pass was the residual 0.8x of the
+        unlabeled ingest path."""
         mid = F.monotonically_increasing_id()
+        bad = (
+            vectors.invalid_code(F.col("vector"), validate_dim)
+            if validate_dim is not None
+            else F.lit(None).cast("int")
+        )
         agg = (
-            df.select(
-                F.shiftright(mid, 33).alias("_pid"),
-                F.size("vector").alias("_n"),
-            )
+            df.select(F.shiftright(mid, 33).alias("_pid"), bad.alias("_bad"))
             .groupBy("_pid")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.max(
-                    F.when(F.col("_n") != F.lit(validate_dim or -1), F.col("_n"))
-                ).alias("bad"),
-            )
+            .agg(F.count("*").alias("cnt"), F.max("_bad").alias("bad"))
             .collect()
         )
-        if validate_dim is not None:
-            for r in agg:
-                if r["bad"] is not None:
-                    raise DimensionMismatch(validate_dim, r["bad"])
+        for r in agg:
+            vectors.raise_invalid(r["bad"], validate_dim)
         counts = {r["_pid"]: r["cnt"] for r in agg}
         base, pairs = offset, []
         for pid in sorted(counts):
@@ -388,7 +394,7 @@ class FaissSparkEngine:
                 transformed = True
             # r14 shuffle-bytes fix (VERDICT r13 task 2c — the 8.8M x 1536
             # raw add ENOSPC'd on a 54 GB f32 range shuffle): cluster
-            # ASSIGNMENT (a narrow pandas-UDF pass) is split from the
+            # ASSIGNMENT (a narrow mapInArrow pass) is split from the
             # cluster LAYOUT (the repartitionByRange exchange), and for the
             # PQ/SQ8 storage tiers the layout shuffle runs AFTER the encode
             # — the exchange moves m-byte / int8 codes (32x / 4x fewer
@@ -525,8 +531,6 @@ class FaissSparkEngine:
                 # add only.
                 idx._edgeless_checked = True
                 if not idx.data.filter(F.size("neighbors") > 0).take(1):
-                    import warnings
-
                     warnings.warn(
                         f"Index {idx.name} ({idx.spec.factory!r}): every cluster "
                         f"is below min_graph_rows="
@@ -693,7 +697,7 @@ class FaissSparkEngine:
             # re-co-locate each cluster before the grouped rebuild — the
             # union spreads a cluster across every slice's partitions, and
             # per-partition builds there would still produce micro-graphs
-            # (range, not hash: KMeans clusters are skewed, _assign_clusters)
+            # (range, not hash: KMeans clusters are skewed, _cluster_layout)
             rows = int(idx.params.get("graph_partition_rows", self.GRAPH_ROWS))
             n_parts = max(1, -(-max(int(n_rows), 1) // rows))
             base = base.repartitionByRange(n_parts, "cluster_id", "label")
@@ -881,8 +885,6 @@ class FaissSparkEngine:
         if idx.skew_warned:
             return  # already said so; only suppresses the duplicate warning
         idx.skew_warned = True
-        import warnings
-
         warnings.warn(
             f"Index {idx.name}: appended rows drifted the corpus "
             f"histogram over the skew cap — max cluster "
@@ -1074,8 +1076,6 @@ class FaissSparkEngine:
             self._compact_disk_graph(idx)
 
     def _add_disk_graph(self, idx: FaissIndex, vecs: DataFrame, rebuild: bool) -> None:
-        import shutil
-
         old_slices = []
         man = self._graph_manifest_load(idx)
         if rebuild:
@@ -1123,8 +1123,6 @@ class FaissSparkEngine:
         and no step requires the corpus in executor cache.  Full slice
         directories are never graph-rebuilt; past FULL_SLICE_FANOUT their
         parquet part-files are concat-merged by FILE MOVE (no Spark job)."""
-        import shutil
-
         # buffered micro-batches join the compaction as a written slice
         self._flush_graph_buffer(idx, compact_after=False)
         man = self._graph_manifest_load(idx)
@@ -1186,8 +1184,6 @@ class FaissSparkEngine:
         physical re-layout never invalidates a graph; cluster_id=N
         partition subdirs merge by matching relative path).  Pure
         filesystem renames — no graph rebuild, no Spark job."""
-        import shutil
-
         root = self._graph_slice_root(idx)
         dst_e = man["slices"][picked[0]]
         dst = os.path.join(root, dst_e["dir"])
@@ -1363,12 +1359,6 @@ class FaissSparkEngine:
             sq8_decode_np,
             sq8_encode_np,
         )
-        from duckdb_faiss_ext_spark.metrics import (
-            is_descending,
-            pairwise,
-            resolve_metric,
-        )
-
         metric = resolve_metric(idx.metric)
         if metric not in ("L2", "INNER_PRODUCT", "COSINE"):
             return
@@ -1387,10 +1377,9 @@ class FaissSparkEngine:
             samp = samp.filter(
                 F.rand(11) < min(1.0, 1.3 * self.SQ_MARGIN_SAMPLE / n)
             )
-        rows = samp.limit(self.SQ_MARGIN_SAMPLE).collect()
-        if len(rows) < k + 2:
+        x, _ = vectors.fetch(samp.limit(self.SQ_MARGIN_SAMPLE), dim=idx.dim)
+        if len(x) < k + 2:
             return
-        x = np.asarray([r["vector"] for r in rows], dtype=np.float32)
         # one-sided quantization through THE canonical numpy codec pair
         # (bit-identical to every kernel path) — a hand-copied formula
         # here would drift if the codec convention ever changes again
@@ -1416,8 +1405,6 @@ class FaissSparkEngine:
         # duplicate-heavy corpora where vdiff = 0): no quantization effect
         # exists, so 0 >= 0 must not warn (r11 review finding)
         if pert > 0 and pert >= margin:
-            import warnings
-
             warnings.warn(
                 f"Index {idx.name} ({idx.spec.factory!r}, metric {metric}): "
                 "SQ8 decode error reaches the corpus's inter-neighbor "
@@ -1519,8 +1506,6 @@ class FaissSparkEngine:
                             self._fit_kmeans_medium(sample, nlist, max_iter)
                         )
                     idx.centroids = cents
-                    from duckdb_faiss_ext_spark.metrics import resolve_metric
-
                     if resolve_metric(idx.metric) == "L2":
                         hist = l2_counts  # same reuse rule as the MLlib path
                         if not small:
@@ -1573,8 +1558,7 @@ class FaissSparkEngine:
         its assigned center (the standard Lloyd repair, also what keeps
         nlist constant).  Convergence at max center shift < 1e-4 mirrors
         MLlib's default tol."""
-        pdf = sample.select("vector").toPandas()
-        x = np.asarray(list(pdf["vector"]), dtype=np.float64)
+        x, _ = vectors.fetch(sample.select("vector"), dtype=np.float64)
         rng = np.random.default_rng(42)
         cents = np.empty((nlist, x.shape[1]), dtype=np.float64)
         cents[0] = x[rng.integers(len(x))]
@@ -1728,42 +1712,9 @@ class FaissSparkEngine:
         import os as _os
         from concurrent.futures import ThreadPoolExecutor
 
-        # zero-copy Arrow fetch (r14 session 2, guide §6 "Arrow for driver
-        # transfers"): the list<float> column's flattened child buffer
-        # reshapes straight into the (n, d) float32 matrix — the previous
-        # ``np.ascontiguousarray(list(pdf["vector"]))`` built one Python
-        # object per row and dominated the fit's wall clock once the gemm
-        # contention fix landed (~15 s of the 30 s fit at 524k x 64).
-        # Strict uniform-offsets check; ragged/null samples (never produced
-        # by the validated add/train paths) fall back to the row path.
-        x = None
-        try:
-            tbl = sample.select("vector").toArrow()
-            vcol = tbl.column("vector").combine_chunks()
-            # both row-level AND element-level nulls must be absent: a null
-            # ELEMENT lives on the values child, where to_numpy would
-            # silently yield NaN instead of failing loudly like the row
-            # path (ADVICE r14)
-            if (
-                tbl.num_rows
-                and vcol.null_count == 0
-                and vcol.values.null_count == 0
-            ):
-                off = np.asarray(vcol.offsets)
-                widths = np.unique(np.diff(off))
-                if len(widths) == 1 and widths[0] > 0:
-                    flat = vcol.flatten().to_numpy(zero_copy_only=False)
-                    x = np.ascontiguousarray(
-                        flat.reshape(tbl.num_rows, int(widths[0])),
-                        dtype=np.float32,
-                    )
-            del tbl, vcol
-        except Exception:
-            x = None
-        if x is None:
-            pdf = sample.select("vector").toPandas()
-            x = np.ascontiguousarray(list(pdf["vector"]), dtype=np.float32)
-            del pdf
+        # zero-copy Arrow fetch: a per-row decode was ~15 s of a 30 s fit
+        # at 524k x 64 (r14 session 2)
+        x, _ = vectors.fetch(sample.select("vector"))
         n, d = x.shape
         rng = np.random.default_rng(42)
         xn = np.einsum("ij,ij->i", x, x, dtype=np.float64)
@@ -1987,8 +1938,6 @@ class FaissSparkEngine:
           O(nlist)-row job, never a corpus scan."""
         nlist = idx.spec.nlist
         metric = idx.metric
-        from duckdb_faiss_ext_spark.metrics import resolve_metric
-
         if model is not None and resolve_metric(metric) == "L2":
             counts = np.zeros(nlist, dtype=np.int64)
             sizes = list(model.summary.clusterSizes)
@@ -1996,16 +1945,14 @@ class FaissSparkEngine:
             return counts
 
         rows = (
-            sample.select(
-                self._cluster_assign_udf(idx)(F.col("vector")).alias("cid")
-            )
-            .groupBy("cid")
+            self._assign_only(idx, sample.select("vector"))
+            .groupBy("cluster_id")
             .count()
             .collect()
         )
         counts = np.zeros(nlist, dtype=np.int64)
         for r in rows:
-            counts[int(r["cid"])] = int(r["count"])
+            counts[int(r["cluster_id"])] = int(r["count"])
         return counts
 
     def _warn_if_degenerate_assignment(
@@ -2029,8 +1976,6 @@ class FaissSparkEngine:
         # max-cluster trip point: 20% of rows, relaxed to 5x the even share
         # for small nlist (at nlist=4 a 25% cluster is the EXPECTED size)
         if empty > nlist // 2 or biggest > max(0.2 * n, 5.0 * n / nlist):
-            import warnings
-
             # the root-cause hint is metric-specific (VERDICT r11 #3): the
             # norm-collapse mechanism only exists for IP-family metrics;
             # for L2-family the usual culprit is a degenerate/clustered
@@ -2101,8 +2046,6 @@ class FaissSparkEngine:
             return counts
         metric = idx.metric
         marg = idx.metric_arg
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
         desc = is_descending(metric)
         dim = idx.dim
         # donors: empty slots cost nothing; small slots are folded into
@@ -2156,18 +2099,15 @@ class FaissSparkEngine:
             if not any(len(p) for p in pts.values()):
                 return counts
         else:
-            pdf = (
-                sample.withColumn(
-                    "cid", self._cluster_assign_udf(idx)(F.col("vector"))
-                )
-                .filter(F.col("cid").isin([int(c) for c in wanted]))
-                .select("cid", "vector")
-                .toPandas()
+            mat, rest = vectors.fetch(
+                self._assign_only(idx, sample.select("vector"))
+                .filter(F.col("cluster_id").isin([int(c) for c in wanted]))
+                .select("cluster_id", "vector"),
+                dim=dim,
             )
-            if not len(pdf):
+            if not len(mat):
                 return counts
-            cids = pdf["cid"].to_numpy()
-            mat = np.asarray(list(pdf["vector"]), dtype=np.float32)
+            cids = rest["cluster_id"]
             for c in wanted:
                 pts[c] = mat[cids == c]
         cents = idx.centroids.astype(np.float32).copy()
@@ -2349,8 +2289,6 @@ class FaissSparkEngine:
             or not int(idx.params.get("rebalance_clusters", 1))
         ):
             return None
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
         desc = is_descending(idx.metric)
         metric, marg = idx.metric, idx.metric_arg
         nlist0 = max(int(idx.spec.nlist), 1)
@@ -2453,17 +2391,16 @@ class FaissSparkEngine:
                     F.lit(float(min(1.0, 1.3 * samp / counts[c]))),
                 ]
             frac = F.element_at(F.create_map(*frac_pairs), F.col("cluster_id"))
-            pdf = (
+            mat, rest = vectors.fetch(
                 self._decoded_view(idx, idx.data)
                 .select("cluster_id", "vector")
                 .filter(F.col("cluster_id").isin(over))
-                .filter(F.rand(4242 + _pass) < frac)
-                .toPandas()
+                .filter(F.rand(4242 + _pass) < frac),
+                dim=idx.dim,
             )
-            if not len(pdf):
+            if not len(mat):
                 break
-            cids = pdf["cluster_id"].to_numpy()
-            mat = np.asarray(list(pdf["vector"]), dtype=np.float32)
+            cids = rest["cluster_id"]
             cents = idx.centroids.astype(np.float32).copy()
             fams: dict = {}
             extras: list = []
@@ -2477,8 +2414,6 @@ class FaissSparkEngine:
                 # pass rather than fanning out on a thin sample)
                 k_c = int(np.ceil(counts[c] / (0.5 * cap)))
                 k_c = max(2, min(k_c, 16, growth_budget + 1, len(p)))
-                from duckdb_faiss_ext_spark.metrics import resolve_metric
-
                 sub = self._lloyd_np(
                     p, k_c, seed=9000 + c,
                     # dot-selection metrics need unit-norm children (see
@@ -2518,9 +2453,9 @@ class FaissSparkEngine:
             def reassigned(frame: DataFrame) -> DataFrame:
                 """Offenders' rows re-pick among their own children — a
                 zero-copy mapInArrow kernel (guide §4.1/§4.2, VERDICT r14
-                task 3): the r14 pandas_udf decoded one Python list PER ROW
-                (``np.asarray(list(v))``), and on SQ8 indexes additionally
-                paid a JVM decode of EVERY row's vector; the r14 layout
+                task 3): the r14 pandas_udf decoded one Python list PER ROW,
+                and on SQ8 indexes additionally paid a JVM decode of EVERY
+                row's vector; the r14 layout
                 tripped 16 splits on the 1M bench corpus, putting this
                 kernel inside the timed build.  Numerics are unchanged:
                 batch boundaries are the same arrow.maxRecordsPerBatch
@@ -2530,8 +2465,6 @@ class FaissSparkEngine:
                 expression (sq8_decode_np contract).  Batches with no
                 offender rows pass through without touching a vector
                 buffer."""
-                import pyarrow as pa
-
                 cols = frame.columns
                 cid_pos = cols.index("cluster_id")
                 vec_pos = cols.index("codes" if sq else "vector")
@@ -2555,15 +2488,9 @@ class FaissSparkEngine:
                         if not np.isin(cid, split).any():
                             yield rb
                             continue
-                        vcol = rb.column(vec_pos)
-                        flat = vcol.flatten().to_numpy(zero_copy_only=False)
-                        if len(flat) == nrows * dim and not vcol.null_count:
-                            xmat = flat.reshape(nrows, dim)
-                        else:  # ragged/null rows — loud per-row fallback,
-                            # exactly like the pandas path's np.asarray
-                            xmat = np.asarray(
-                                [np.asarray(v) for v in vcol.to_pylist()]
-                            )
+                        xmat = vectors.decode(
+                            rb.column(vec_pos), dim, dtype=None
+                        )
                         for c, (ids, sub) in fams_v.items():
                             m = cid == c
                             if not m.any():
@@ -2618,8 +2545,6 @@ class FaissSparkEngine:
                 # any offender dir the rewrite did not re-emit.  (Local
                 # filesystem delete; on an object store this is the same
                 # per-prefix delete the overwrite itself performs.)
-                import shutil
-
                 for c in split_ids:
                     if c not in emitted:
                         shutil.rmtree(
@@ -2659,59 +2584,17 @@ class FaissSparkEngine:
             corpus, idx.sq_vmin, idx.sq_vdiff, codes_col="codes", out_col="vector"
         )
 
-    def _cluster_assign_udf(self, idx: FaissIndex):
-        """Arrow-batched nearest-centroid assignment under the index metric
-        (FAISS coarse quantization) — broadcast centroids, one matmul per
-        batch.  Exposed separately from ``_assign_clusters`` so the build
-        breakdown probe can time the assignment pass without the range
-        shuffle (SCALE.md r7)."""
-        cents = idx.centroids
-        metric = idx.metric
-        marg = idx.metric_arg
-        bc = self.spark.sparkContext.broadcast(cents)
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
-        desc = is_descending(metric)
-
-        def assign(v: pd.Series) -> pd.Series:
-            x = np.asarray(list(v), dtype=np.float32)
-            # chunk so the (rows, nlist) score temp stays ~<=64 MB: a full
-            # 64k Arrow batch at nlist=4096 is a >1 GB matrix (plus kernel
-            # temps) PER WORKER — 32 workers tripped the host's global OOM
-            # at the 16M/4096 probe (SCALE.md r9); assignment only needs
-            # the per-row argmax, so chunking changes nothing numerically
-            step = max(256, int(64e6 // (max(len(cents), 1) * 4)))
-            out = np.empty(len(x), dtype=np.int32)
-            for s in range(0, len(x), step):
-                scores = pairwise(x[s : s + step], bc.value, metric, marg)
-                ids, _ = topk_indices(scores, 1, desc)
-                out[s : s + step] = ids[:, 0]
-            return pd.Series(out)
-
-        return F.pandas_udf(assign, "int")
-
     def _assign_only(self, idx: FaissIndex, vecs: DataFrame) -> DataFrame:
         """Cluster assignment alone — a narrow mapInArrow projection, no
         exchange.  add() encodes PQ/SQ8 storage between this and
         `_cluster_layout` so the range shuffle moves codes, not f32 (r14).
 
-        Arrow zero-copy decode (guide §4.1/§4.2): the list<float> column's
-        flattened child buffer reshapes straight into an (n, d) float32
-        matrix — the previous pandas-UDF path built one Python list object
-        per row (``np.asarray(list(v))``), which dominated the 1M-corpus
-        assignment pass (~45 s for ~3 s of actual BLAS).  Scoring keeps the
-        EXACT chunk-size formula and pairwise/topk_indices calls of the
-        pandas path (Arrow batch boundaries match pandas batch boundaries —
-        both are cut by arrow.maxRecordsPerBatch — so BLAS shapes and
-        therefore last-ulp tie behavior are unchanged)."""
-        import pyarrow as pa
-
-        from duckdb_faiss_ext_spark.metrics import (
-            is_descending,
-            pairwise,
-            topk_indices,
-        )
-
+        Zero-copy decode (vectors.decode): a per-row Python decode
+        dominated the 1M-corpus assignment (~45 s for ~3 s of BLAS).
+        Scoring is chunked so the (rows, nlist) score temp stays ~<=64 MB
+        per worker (SCALE.md r9: full 64k batches at nlist=4096 tripped
+        the host OOM); only the per-row argmax is kept, so chunking
+        changes nothing numerically."""
         cents = idx.centroids
         metric = idx.metric
         marg = idx.metric_arg
@@ -2719,6 +2602,7 @@ class FaissSparkEngine:
         bc = self.spark.sparkContext.broadcast(cents)
         desc = is_descending(metric)
         vec_pos = vecs.columns.index("vector")
+        label_pos = vecs.columns.index("label") if "label" in vecs.columns else None
 
         def assign_batches(batches):
             c = bc.value
@@ -2727,17 +2611,11 @@ class FaissSparkEngine:
                 nrows = rb.num_rows
                 if nrows == 0:
                     continue
-                vcol = rb.column(vec_pos)
-                flat = vcol.flatten().to_numpy(zero_copy_only=False)
-                if len(flat) == nrows * dim and not vcol.null_count:
-                    x = np.ascontiguousarray(
-                        flat.reshape(nrows, dim), dtype=np.float32
-                    )
-                else:  # ragged/null rows — per-row fallback (fails loudly
-                    # on None exactly like the pandas path did)
-                    x = np.asarray(
-                        [np.asarray(v, dtype=np.float32) for v in vcol.to_pylist()]
-                    )
+                x = vectors.decode(
+                    rb.column(vec_pos),
+                    dim,
+                    ids=None if label_pos is None else rb.column(label_pos),
+                )
                 out = np.empty(nrows, dtype=np.int32)
                 for s in range(0, nrows, step):
                     scores = pairwise(x[s : s + step], c, metric, marg)
@@ -2766,9 +2644,6 @@ class FaissSparkEngine:
         # partition's single-threaded scan).
         n_parts = max(assigned.rdd.getNumPartitions(), 1)
         return assigned.repartitionByRange(n_parts, "cluster_id", "label")
-
-    def _assign_clusters(self, idx: FaissIndex, vecs: DataFrame) -> DataFrame:
-        return self._cluster_layout(self._assign_only(idx, vecs))
 
     # ---------------------------------------------------------------- search
 
@@ -2899,19 +2774,11 @@ class FaissSparkEngine:
 
     def _probe_mask_fn(self, idx: FaissIndex, nprobe: int):
         """(qids, q) -> (nq, nlist) boolean mask of probed clusters."""
-        cents = idx.centroids
-        metric = idx.metric
-        marg = idx.metric_arg
+        ids_fn, nlist = self._probe_ids_fn(idx, nprobe), len(idx.centroids)
 
         def fn(qids: np.ndarray, q: np.ndarray) -> np.ndarray:
-            from duckdb_faiss_ext_spark.metrics import is_descending
-
-            ids = self._coarse_topk(
-                q, cents, metric, marg, nprobe, is_descending(metric)
-            )
-            mask = np.zeros((q.shape[0], cents.shape[0]), dtype=bool)
-            rows = np.arange(q.shape[0])[:, None]
-            mask[rows, ids] = True
+            mask = np.zeros((q.shape[0], nlist), dtype=bool)
+            mask[np.arange(q.shape[0])[:, None], ids_fn(qids, q)] = True
             return mask
 
         return fn
@@ -3055,7 +2922,7 @@ class FaissSparkEngine:
             # same pairwise/top-k kernels and (score, label) tie-break, so
             # results are identical).  Flat: block-nested-loop over the
             # whole corpus.  IVF: queries explode to one row per probed
-            # cluster (narrow pandas_udf) and blocks EQUI-join on the
+            # cluster (narrow arrow_udf) and blocks EQUI-join on the
             # cluster id — the probe pruning survives, nothing is cartesian.
             # Opt-in: the pack/join stages cost more than one broadcast for
             # ordinary query batches.
@@ -3083,9 +2950,10 @@ class FaissSparkEngine:
                     metric_arg=idx.metric_arg,
                     bulk=True,  # bulk_queries = caller says it's big
                     right_sq8=sq8_params,
+                    dim=idx.dim,
                 ).select("qid", "rank", F.col("label"), F.col("distance"))
-            probes_udf = self._probe_clusters_udf(idx, int(params.get("nprobe", 1)))
-            q = q.withColumn("cluster_id", F.explode(probes_udf(F.col("vector"))))
+            probes = self._probe_clusters_arrow(idx, int(params.get("nprobe", 1)))
+            q = q.withColumn("cluster_id", F.explode(probes("qid", "vector")))
             return similarity_join_grouped(
                 q,
                 corpus.select("label", corp_vec, "cluster_id"),
@@ -3097,6 +2965,7 @@ class FaissSparkEngine:
                 group_col="cluster_id",
                 metric_arg=idx.metric_arg,
                 right_sq8=sq8_params,
+                dim=idx.dim,
             ).select("qid", "rank", F.col("label"), F.col("distance"))
         return topk_ops.exact_knn_flat(
             corpus,
@@ -3110,6 +2979,7 @@ class FaissSparkEngine:
             cluster_col=cluster_col,
             probe_mask_for=probe_fn,
             sq8=sq8_params,
+            dim=idx.dim,
         )
 
     # broadcast cap for the residual-ADC per-(query, probed cluster) lookup
@@ -3155,12 +3025,10 @@ class FaissSparkEngine:
                 idx.spec.kind == "ivf" and "cluster_id" in corpus.columns
             )
             if has_clusters:
-                probes_udf = self._probe_clusters_udf(
+                probes = self._probe_clusters_arrow(
                     idx, min(nprobe, idx.spec.nlist)
                 )
-                q = q.withColumn(
-                    "cluster_id", F.explode(probes_udf(F.col("vector")))
-                )
+                q = q.withColumn("cluster_id", F.explode(probes("qid", "vector")))
             return pq_search_grouped(
                 corpus,
                 q,
@@ -3192,7 +3060,9 @@ class FaissSparkEngine:
             per_q = max(1, min(nprobe, idx.spec.nlist)) * m_ * nk_ * 4
             chunk = max(1, min(chunk, self.PQ_LUT_BUDGET_BYTES // per_q))
         partials = []
-        for qids, q in topk_ops.iter_query_blocks(queries_df, qid_col, vec_col):
+        for qids, q in topk_ops.iter_query_blocks(
+            queries_df, qid_col, vec_col, dim=idx.dim
+        ):
             for lo in range(0, len(qids), chunk):
                 cqids = qids[lo : lo + chunk]
                 cq = q[lo : lo + chunk]
@@ -3312,7 +3182,7 @@ class FaissSparkEngine:
         # executor-packed binary blocks (2.3x at 1M query rows, topk.py)
         for qids, q in topk_ops.iter_query_blocks(
             queries_df, qid_col, vec_col,
-            packed=bool(params.get("bulk_queries")),
+            packed=bool(params.get("bulk_queries")), dim=idx.dim,
         ):
             for lo in range(0, len(qids), topk_ops.MAX_QUERY_BATCH):
                 cqids = qids[lo : lo + topk_ops.MAX_QUERY_BATCH]
@@ -3346,41 +3216,34 @@ class FaissSparkEngine:
             out = out.unionByName(p)
         return out
 
-    def _probe_clusters_udf(self, idx: FaissIndex, nprobe: int):
-        """pandas_udf: vector -> array<int> of the query's nprobe nearest
-        coarse cells — the executor-side twin of ``_probe_ids_fn`` for the
-        bulk-query path (probe assignment must not run on the driver when
-        the query side is corpus-scale)."""
+    def _probe_clusters_arrow(self, idx: FaissIndex, nprobe: int):
+        """arrow_udf: (qid, vector) -> array<int> of the query's nprobe
+        nearest coarse cells — the executor-side twin of ``_probe_ids_fn``
+        for the bulk-query path (probe assignment must not run on the
+        driver when the query side is corpus-scale)."""
         cents = idx.centroids
         metric = idx.metric
         marg = idx.metric_arg
+        dim = idx.dim
         bc = self.spark.sparkContext.broadcast(cents)
-        from duckdb_faiss_ext_spark.metrics import is_descending
-
         desc = is_descending(metric)
         np_ = min(nprobe, len(cents))
 
-        def fn(v: pd.Series) -> pd.Series:
-            x = np.asarray(list(v), dtype=np.float32)
+        def fn(qid, v):
+            x = vectors.decode(v, dim, ids=qid, what="query vectors", finite=True)
             ids = FaissSparkEngine._coarse_topk(x, bc.value, metric, marg, np_, desc)
-            return pd.Series([row.astype(np.int32).tolist() for row in ids])
+            return pa.ListArray.from_arrays(
+                pa.array(np.arange(len(ids) + 1, dtype=np.int32) * ids.shape[1]),
+                pa.array(ids.astype(np.int32).ravel()),
+            )
 
-        return F.pandas_udf(fn, "array<int>")
+        return F.arrow_udf(fn, "array<int>")
 
     def _probe_ids_fn(self, idx: FaissIndex, nprobe: int):
         """(qids, q) -> (nq, nprobe) int64 ids of each query's probed clusters."""
-        cents = idx.centroids
-        metric = idx.metric
-        marg = idx.metric_arg
-
-        def fn(qids: np.ndarray, q: np.ndarray) -> np.ndarray:
-            from duckdb_faiss_ext_spark.metrics import is_descending
-
-            return self._coarse_topk(
-                q, cents, metric, marg, nprobe, is_descending(metric)
-            )
-
-        return fn
+        cents, metric, marg = idx.centroids, idx.metric, idx.metric_arg
+        desc = is_descending(metric)
+        return lambda qids, q: self._coarse_topk(q, cents, metric, marg, nprobe, desc)
 
     def _pad_no_hit_queries(
         self, queries_df: DataFrame, lists: DataFrame, k: int, metric: str, qid_col: str
@@ -3440,12 +3303,12 @@ class FaissSparkEngine:
         idx.data.count()
         dec = self._decoded_view(idx, idx.data)
         if "vector" in dec.columns:
-            row = dec.select("vector").first()
-            if row is None:
+            x, _ = vectors.fetch(dec.select("vector").limit(1), dim=idx.dim)
+            if not len(x):
                 raise FaissSparkError(
                     f"Index {name} is empty; add vectors first"
                 )
-            vec = [float(v) for v in row["vector"]]
+            vec = x[0].tolist()
         else:
             # PQ storage keeps only codes; any in-range query works for a JIT
             # pass — the ADC path decodes against the codebooks regardless
@@ -3534,6 +3397,10 @@ class FaissSparkEngine:
     def save(self, name: str, path: str) -> None:
         """faiss_save (:171-200): Parquet data + JSON metadata sidecar.
 
+        Crash-safe: data.parquet, then meta.json, go into a sibling temp
+        directory that replaces ``path`` only once both are complete, so a
+        failure part-way leaves the previous save at ``path`` loadable.
+
         Disk-graph indexes: save() is a durability point — any buffered
         micro-batches are flushed to a real slice directory under
         ``storage_path`` first (ADVICE r8: the export alone would include
@@ -3541,7 +3408,25 @@ class FaissSparkEngine:
         idx = self.registry.get(name)
         if idx.storage_path and idx.pending_graph:
             self._flush_graph_buffer(idx, compact_after=False)
-        os.makedirs(path, exist_ok=True)
+        path = os.path.abspath(path)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = tempfile.mkdtemp(
+            prefix=f".{os.path.basename(path)}.saving-", dir=os.path.dirname(path)
+        )
+        try:
+            self._write_index(idx, tmp)
+            # the old save is moved aside only once the new one is complete
+            if os.path.exists(path):
+                os.rename(path, tmp + ".old")
+            os.rename(tmp, path)
+        except BaseException:
+            if os.path.exists(tmp + ".old") and not os.path.exists(path):
+                os.rename(tmp + ".old", path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        shutil.rmtree(tmp + ".old", ignore_errors=True)
+
+    def _write_index(self, idx: FaissIndex, path: str) -> None:
         if idx.data is not None:
             writer = idx.data.write.mode("overwrite")
             if "cluster_id" in idx.data.columns:

@@ -66,11 +66,21 @@ class TrainingError(FaissSparkError):
     """K-means training with too few points (faiss_extension.cpp:400-404)."""
 
 
-class DimensionMismatch(FaissSparkError):
+class InvalidVector(FaissSparkError, ValueError):
+    """Null row or element, ragged or wrong-dimension row, NaN/Inf value
+    (ListVectorToFaiss, faiss_extension.cpp:267-295).  The message starts
+    with ``InvalidVector``, which stays readable in Spark's executor errors.
+    Also a ValueError, which the per-site checks it replaces raised."""
+
+    def __init__(self, detail: str):
+        super().__init__(f"InvalidVector: {detail}")
+
+
+class DimensionMismatch(InvalidVector):
     """Vector length != index dimension (ListVectorToFaiss, faiss_extension.cpp:278-283)."""
 
-    def __init__(self, expected: int, got: int):
+    def __init__(self, expected: int, got: int, where: str = ""):
         super().__init__(
             f"All list vectors need to have the same dimensionality as the index: "
-            f"expected {expected}, got {got}"
+            f"expected {expected}, got {got}" + (f" ({where})" if where else "")
         )

@@ -81,40 +81,22 @@ def cosine_batch_udf():
     candidate-verify joins (higher-order functions evaluate per element);
     use it on hot re-rank paths, keep `cosine_similarity` where sequential
     left-to-right accumulation must match a SQL oracle bit-for-bit.
-    Built lazily: a DDL-typed pandas_udf would parse through the active
-    session at import time."""
+    Null, ragged or dimension-mismatched vectors raise InvalidVector
+    (vectors.decode).  Built lazily: a DDL-typed UDF would parse through
+    the active session at import time."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import DoubleType
 
-    # no annotations: pandas_udf's typehint inference rejects quoted
-    # (string) hints, and the explicit DoubleType return covers typing
+    from duckdb_faiss_ext_spark import vectors
+
     def fn(va, vb):
-        if len(va) == 0:
-            return pd.Series([], dtype=np.float64)
-        # explicit input validation (ADVICE r4): a null or ragged vector
-        # must fail with an attributable message, not an opaque numpy
-        # reshape/ufunc error — same contract as the packed query stream
-        if va.isna().any() or vb.isna().any():
-            raise ValueError(
-                "cosine_batch_udf: null vector in input (inputs must be "
-                "non-null uniform-dimension arrays)"
-            )
-        try:
-            a = np.asarray(list(va), dtype=np.float64)
-            b = np.asarray(list(vb), dtype=np.float64)
-        except ValueError as e:
-            raise ValueError(
-                "cosine_batch_udf: ragged vectors in input (inputs must be "
-                "non-null uniform-dimension arrays)"
-            ) from e
-        if a.ndim != 2 or b.ndim != 2 or a.shape[1] != b.shape[1]:
-            raise ValueError(
-                "cosine_batch_udf: ragged or dimension-mismatched vectors "
-                f"(left shape {a.shape}, right shape {b.shape})"
-            )
+        a = vectors.decode(va, dtype=np.float64, what="cosine_batch_udf vectors")
+        b = vectors.decode(
+            vb, a.shape[1], dtype=np.float64, what="cosine_batch_udf vectors"
+        )
         num = (a * b).sum(axis=1)
         den = np.sqrt((a * a).sum(axis=1)) * np.sqrt((b * b).sum(axis=1))
-        return pd.Series(num / den)
+        return pa.array(num / den, pa.float64())
 
-    return F.pandas_udf(fn, DoubleType())
+    return F.arrow_udf(fn, DoubleType())

@@ -24,9 +24,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from duckdb_faiss_ext_spark import vectors
 from duckdb_faiss_ext_spark.functions.vector import cosine_batch_udf
 
 WHITESPACE = r"\s+"
@@ -822,12 +824,13 @@ def cosine_lsh_pairs(
     cap_stats: dict | None = None,
 ) -> DataFrame:
     """Scale path: random-hyperplane LSH.  Each vector gets n_planes sign
-    bits (one broadcast matmul in a pandas_udf); bits are split into bands
+    bits (one broadcast matmul per Arrow batch in an arrow_udf); bits are
+    split into bands
     and pairs only form inside identical (band, bits) buckets, then exact
     cosine verifies.  Recall < 1 by construction (candidates must agree on
     some band); raise n_bands/lower band width for higher recall.
 
-    The verify computes cosine in a VECTORIZED Arrow pandas_udf (float64
+    The verify computes cosine in a VECTORIZED arrow_udf (float64
     numpy over the whole batch) rather than Catalyst aggregate/zip_with
     lambdas: higher-order functions evaluate per element (~35 µs/pair at
     64 dim) and the verify join is exactly what the candidate count scales
@@ -838,13 +841,13 @@ def cosine_lsh_pairs(
     spark = df.sparkSession
     bpl = spark.sparkContext.broadcast(planes)
 
-    def signs(v: pd.Series) -> pd.Series:
-        x = np.asarray(list(v), dtype=np.float32)
+    def signs(v):
+        x = vectors.decode(v, dim)
         bits = (x @ bpl.value) > 0
         vals = (bits * (1 << np.arange(n_planes, dtype=np.int64))).sum(axis=1)
-        return pd.Series(vals.astype(np.int64))
+        return pa.array(vals.astype(np.int64))
 
-    signs_udf = F.pandas_udf(signs, "bigint")
+    signs_udf = F.arrow_udf(signs, "bigint")
     assert n_planes % n_bands == 0
     width = n_planes // n_bands
     sig = df.select(

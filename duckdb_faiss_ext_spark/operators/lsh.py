@@ -35,6 +35,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from duckdb_faiss_ext_spark import vectors
 from duckdb_faiss_ext_spark.operators.topk import exact_knn_flat
 
 __all__ = ["lsh_signatures", "lsh_ann_cosine"]
@@ -97,13 +98,7 @@ def lsh_signatures(
             if n == 0:
                 continue
             ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            values = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            if len(values) == n * d:
-                x = np.ascontiguousarray(values.reshape(n, d), dtype=np.float32)
-            else:
-                x = np.asarray(
-                    [np.asarray(v, dtype=np.float32) for v in rb.column(1).to_pylist()]
-                )
+            x = vectors.decode(rb.column(1), d, ids=ids)
             if ctr is not None:
                 x = x - ctr[None, :]
             bits = (x @ flat_planes.T) > 0  # (n, T*P)

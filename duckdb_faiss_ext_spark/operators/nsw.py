@@ -29,6 +29,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from duckdb_faiss_ext_spark import vectors
 from duckdb_faiss_ext_spark.metrics import is_descending, pairwise
 
 __all__ = [
@@ -467,13 +468,8 @@ def build_slice_graphs(
             labels_parts.append(
                 rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             )
-            flat = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            if dim is None:
-                first = rb.column(1)[0].as_py()
-                dim = len(first)
-            vec_parts.append(
-                np.ascontiguousarray(flat, dtype=np.float32).reshape(-1, dim)
-            )
+            vec_parts.append(vectors.decode(rb.column(1), dim, ids=rb.column(0)))
+            dim = vec_parts[-1].shape[1]
             if has_group:
                 grp_parts.append(
                     rb.column(2).to_numpy(zero_copy_only=False).astype(np.int32)
@@ -592,12 +588,8 @@ def nsw_topk(
             labels_parts.append(
                 rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             )
-            flat = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            if dim is None:
-                dim = len(rb.column(1)[0].as_py())
-            vec_parts.append(
-                np.ascontiguousarray(flat, dtype=np.float32).reshape(-1, dim)
-            )
+            vec_parts.append(vectors.decode(rb.column(1), dim, ids=rb.column(0)))
+            dim = vec_parts[-1].shape[1]
             # neighbors stay Arrow-native: flat values + per-row lengths
             # (the old to_pylist() + per-row dict remap was the search
             # bottleneck once probed clusters split into many segments)

@@ -29,6 +29,8 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from duckdb_faiss_ext_spark import vectors
+
 __all__ = [
     "pq_train",
     "pq_encode",
@@ -64,7 +66,7 @@ def _assign_np(
     x: np.ndarray, centroids: np.ndarray, metric: str, metric_arg: float
 ) -> np.ndarray:
     """Nearest-centroid assignment under the index metric — the numpy twin of
-    the engine's `_assign_clusters` pandas-UDF (same pairwise + argbest)."""
+    the engine's `_assign_only` kernel (same pairwise + argbest)."""
     from duckdb_faiss_ext_spark.metrics import is_descending, pairwise
 
     scores = pairwise(x, centroids, metric, metric_arg)
@@ -99,8 +101,11 @@ def pq_train(
     sub = dim // m
     n = df.count()
     frac = min(1.0, sample * 1.2 / max(n, 1))
-    pdf = df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample).toPandas()
-    x = np.asarray(list(pdf[vec_col]), dtype=np.float32)
+    x, _ = vectors.fetch(
+        df.select(vec_col).sample(fraction=frac, seed=seed).limit(sample),
+        vec_col,
+        dim,
+    )
     if centroids is not None:
         x = x - centroids[_assign_np(x, centroids, metric, metric_arg)]
     x = x.reshape(-1, m, sub)
@@ -149,16 +154,8 @@ def pq_encode(
             n = rb.num_rows
             if n == 0:
                 continue
+            x = vectors.decode(rb.column(1), dim, ids=rb.column(0))
             labels = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            values = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            if len(values) != n * dim:
-                bad = next(
-                    (len(v) for v in rb.column(1).to_pylist() if len(v) != dim), "?"
-                )
-                raise ValueError(
-                    f"pq_encode: expected {dim}-dim vectors, found a {bad}-dim row"
-                )
-            x = np.ascontiguousarray(values.reshape(n, dim), dtype=np.float32)
             if cluster_i is not None:
                 cl = (
                     rb.column(cluster_i)
@@ -202,9 +199,12 @@ def pq_search(
 
     DataFrame wrapper over :func:`pq_search_arrays` for a known-small query
     side; the engine's factory path streams bounded query blocks instead."""
-    qpdf = queries.select(qid_col, q_vec_col).toPandas()
-    qids = qpdf[qid_col].to_numpy(dtype=np.int64)
-    q = np.asarray(list(qpdf[q_vec_col]), dtype=np.float32)
+    m, _, sub = codebooks.shape
+    q, rest = vectors.fetch(
+        queries.select(qid_col, q_vec_col), q_vec_col, m * sub,
+        what="query vectors", finite=True,
+    )
+    qids = rest[qid_col].astype(np.int64)
     return pq_search_arrays(codes_df, qids, q, codebooks, k, metric=metric)
 
 
@@ -291,13 +291,7 @@ def pq_search_arrays(
             if n == 0:
                 continue
             labels = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            codes = (
-                rb.column(1)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, m)
-                .astype(np.int64)
-            )
+            codes = vectors.decode(rb.column(1), m, np.int64, ids=rb.column(0))
             if probes_ is None:
                 # scores[i, r] = sum_j luts[i, j, codes[r, j]]
                 scores = np.zeros((nq_, n), dtype=np.float32)
@@ -405,7 +399,7 @@ def pq_search_grouped(
         queries_df = queries_df.repartition(n_lp, cluster_col)
     lb = _pack_blocks(
         queries_df, qid_col, vec_col, block_rows, np.float32,
-        group_col=cluster_col,
+        group_col=cluster_col, dim=dim, finite=True,
     )
     # codes pack through the SAME block kernel as vectors (int16 payload) —
     # one packing machinery to maintain (r4 review)
@@ -416,6 +410,7 @@ def pq_search_grouped(
         block_rows,
         np.int16,
         group_col=cluster_col,
+        dim=m,
     )
     if cluster_col is None:
         # plain-PQ bulk (no clusters): an equi-join on a constant group key

@@ -31,6 +31,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from duckdb_faiss_ext_spark import vectors
 from duckdb_faiss_ext_spark.functions.quantize import (
     sq8_l2_pairwise,
     sq8_rownorm,
@@ -96,6 +97,8 @@ def _pack_blocks(
     group_col: Optional[str] = None,
     block_bytes: int = BLOCK_BYTES,
     sq8: Optional[tuple] = None,
+    dim: Optional[int] = None,
+    finite: bool = False,
 ) -> DataFrame:
     """(blk BIGINT, [grp BIGINT,] n INT, ids ARRAY<BIGINT>, vecs
     ARRAY<FLOAT/DOUBLE>) — ≤ ``block_rows`` vectors per row, vecs flattened
@@ -115,7 +118,8 @@ def _pack_blocks(
     ``array<tinyint>`` codes, affine-decoded HERE per Arrow batch (same
     kernel-side rule as operators/topk.py: the JVM zip_with decode runs
     interpreted past janino's codegen budget); packed blocks always hold
-    decoded floats, so every downstream score kernel is unchanged."""
+    decoded floats, so every downstream score kernel is unchanged.
+    ``dim``/``finite``: see vectors.decode (None: the first batch pins it)."""
     import pyarrow as pa
 
     # payload dtype: float32/float64 vectors, or int16 PQ code rows (the
@@ -135,6 +139,7 @@ def _pack_blocks(
         # group value -> [ids_buf, vec_buf, held]; ungrouped uses key 0
         bufs: dict = {}
         eff_rows = block_rows  # byte-budgeted once the dim is known
+        d = dim
 
         def flush(g):
             st = bufs[g]
@@ -159,18 +164,20 @@ def _pack_blocks(
             n = rb.num_rows
             if n == 0:
                 continue
+            raw = vectors.decode(
+                rb.column(1), d, dtype=None, ids=rb.column(0), finite=finite
+            )
+            d = raw.shape[1]
             ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            raw = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            dim = len(raw) // n
-            eff_rows = rows_for_budget(block_rows, block_bytes, dim, np_t().itemsize)
+            eff_rows = rows_for_budget(block_rows, block_bytes, d, np_t().itemsize)
             if sq8 is not None:
                 from duckdb_faiss_ext_spark.functions.quantize import (
                     sq8_decode_np,
                 )
 
-                x = sq8_decode_np(raw.reshape(n, dim), sq8[0], sq8[1], np_t)
+                x = sq8_decode_np(raw, sq8[0], sq8[1], np_t)
             else:
-                x = raw.astype(np_t).reshape(n, dim)
+                x = raw.astype(np_t)
             if grouped:
                 grp = rb.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
             else:
@@ -218,12 +225,15 @@ def similarity_join(
     bulk: bool = False,
     block_bytes: int = BLOCK_BYTES,
     right_sq8: "Optional[tuple]" = None,
+    dim: Optional[int] = None,
 ) -> DataFrame:
     """(left_id, rank, right_id, distance) — k nearest right rows per left
     row, exact, with the kernel tie-break (score, then label ascending).
 
     ``dtype`` numpy float type for the distance kernel (default float32,
     FAISS parity; float64 for the double-precision oracle-checked path).
+    ``dim``: vector width on both sides (None: inferred); NaN/±Inf left
+    rows raise InvalidVector, like queries.
 
     Two physical plans:
     - default (``bulk=False``): the query-broadcast kernel — the left side
@@ -258,6 +268,7 @@ def similarity_join(
             metric_arg=marg,
             dtype=dtype,
             sq8=right_sq8,
+            dim=dim,
         )
         rname = right_id if right_id != left_id else f"{right_id}_right"
         return flat.select(
@@ -276,13 +287,14 @@ def similarity_join(
     # own |L|·|R|/bl pair replication.
     g = bnl_grid(left)
     lb = _pack_blocks(
-        left, left_id, left_vec, block_rows, dtype, block_bytes=block_bytes
+        left, left_id, left_vec, block_rows, dtype, block_bytes=block_bytes,
+        dim=dim, finite=True,
     ).repartition(g)
     decode_free = right_sq8 is not None and resolve_metric(metric) == "L2"
     rb_df = _pack_blocks(
         right, right_id, right_vec, block_rows,
         np.int8 if decode_free else dtype, block_bytes=block_bytes,
-        sq8=None if decode_free else right_sq8,
+        sq8=None if decode_free else right_sq8, dim=dim,
     ).repartition(g)
     pairs = lb.crossJoin(
         rb_df.select(
@@ -443,6 +455,7 @@ def similarity_join_grouped(
     metric_arg: float = 0.0,
     block_bytes: int = BLOCK_BYTES,
     right_sq8: "Optional[tuple]" = None,
+    dim: Optional[int] = None,
 ) -> DataFrame:
     """Top-k join restricted to rows sharing ``group_col`` — the bulk-IVF
     search shape: the left side carries one row per (query, probed cluster),
@@ -476,13 +489,14 @@ def similarity_join_grouped(
     # the window below, and blk stays content-derived (min of ids).
     lb = _pack_blocks(
         left.repartition(n_out, group_col),
-        left_id, left_vec, block_rows, dtype, group_col, block_bytes=block_bytes
+        left_id, left_vec, block_rows, dtype, group_col, block_bytes=block_bytes,
+        dim=dim, finite=True,
     )
     decode_free = right_sq8 is not None and resolve_metric(metric) == "L2"
     rb_df = _pack_blocks(
         right, right_id, right_vec, block_rows,
         np.int8 if decode_free else dtype, group_col,
-        block_bytes=block_bytes, sq8=None if decode_free else right_sq8,
+        block_bytes=block_bytes, sq8=None if decode_free else right_sq8, dim=dim,
     )
     pairs = lb.join(
         rb_df.select(
@@ -541,7 +555,7 @@ def similarity_join_lsh(
     """Approximate cosine top-k join — the corpus x corpus SCALE path.
 
     Candidates = bucket collision in any LSH table; each candidate pair is
-    re-ranked with the exact float64 cosine in an Arrow-batched pandas_udf
+    re-ranked with the exact float64 cosine in an Arrow-batched arrow_udf
     (one numpy pass per batch — 1.8x the per-element zip_with/aggregate
     expression on verify joins; no driver involvement either way);
     per-left-row top-k via one window.  Only colliding pairs are ever

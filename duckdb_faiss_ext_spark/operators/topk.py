@@ -22,7 +22,6 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import (
@@ -35,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from duckdb_faiss_ext_spark import vectors
+from duckdb_faiss_ext_spark.errors import DimensionMismatch
 from duckdb_faiss_ext_spark.metrics import (
     is_descending,
     pairwise,
@@ -97,6 +98,7 @@ def iter_query_blocks(
     vec_col: str,
     dtype: type = np.float32,
     packed: bool = False,
+    dim: Optional[int] = None,
 ) -> "Iterator[tuple[np.ndarray, np.ndarray]]":
     """Stream the query side to the driver in bounded blocks.
 
@@ -118,9 +120,24 @@ def iter_query_blocks(
     +0.17 s fixed cost (worker spin-up + extra job), so the crossover is
     ~300k rows — callers opt in when they KNOW the query side is
     corpus-scale (the engine wires ``params={'bulk_queries': 1}`` to this
-    for graph indexes, which have no executor-side block-join alternative)."""
+    for graph indexes, which have no executor-side block-join alternative).
+
+    Both decode through vectors.decode with the NaN/±Inf check; ``dim``
+    is the expected width (None: the first row's)."""
+    import pyarrow as pa
+
     np_item = np.dtype(dtype).itemsize
     if not packed:
+        pa_list = pa.list_(pa.from_numpy_dtype(dtype))
+
+        def block(qids, vecs):
+            ids = pa.array(qids, pa.int64())
+            x = vectors.decode(
+                pa.array(vecs, pa_list), dim, dtype, ids=ids,
+                what="query vectors", finite=True,
+            )
+            return ids.to_numpy(), x
+
         qids: list[int] = []
         vecs: list = []
         eff_rows = MAX_QUERY_BLOCK
@@ -133,13 +150,11 @@ def iter_query_blocks(
             qids.append(row[0])
             vecs.append(row[1])
             if len(qids) >= eff_rows:
-                yield np.asarray(qids, dtype=np.int64), np.asarray(vecs, dtype=dtype)
+                yield block(qids, vecs)
                 qids, vecs = [], []
         if qids:
-            yield np.asarray(qids, dtype=np.int64), np.asarray(vecs, dtype=dtype)
+            yield block(qids, vecs)
         return
-
-    import pyarrow as pa
 
     np_t = np.dtype(dtype)
     sql_vec = "array<double>" if np_t == np.float64 else "array<float>"
@@ -163,35 +178,21 @@ def iter_query_blocks(
             ids_buf, vec_buf, held = [], [], 0
             return out
 
-        dim_seen = None
+        dim_seen = dim
         eff_rows = MAX_QUERY_BLOCK
         for rb in batches:
             n = rb.num_rows
             if n == 0:
                 continue
-            qcol, vcol = rb.column(0), rb.column(1)
-            # integrity BEFORE reshape: ListArray.flatten() silently DROPS
-            # null lists, so a modulo check can pass while every subsequent
-            # vector is shifted (one null among 64 dim-64 rows still gives
-            # len % n == 0) — validate per-row lengths and nulls instead,
-            # and pin the dim across batches (the per-row path fails fast
-            # on the same inputs; the packed path must too)
-            if qcol.null_count or vcol.null_count:
-                raise ValueError(
-                    "iter_query_blocks: null qid or vector in the query side"
-                )
-            lens = np.unique(vcol.value_lengths().to_numpy(zero_copy_only=False))
-            if len(lens) != 1 or (dim_seen is not None and lens[0] != dim_seen):
-                raise ValueError(
-                    "iter_query_blocks: ragged query vectors "
-                    f"(row lengths {lens.tolist()}, expected "
-                    f"{dim_seen if dim_seen is not None else 'uniform'})"
-                )
-            dim_seen = int(lens[0])
+            qcol = rb.column(0)
+            # the first batch pins the dim for the rest of the partition
+            x = vectors.decode(
+                rb.column(1), dim_seen, np_t, ids=qcol,
+                what="query vectors", finite=True,
+            )
+            dim_seen = x.shape[1]
             eff_rows = _block_rows_for(dim_seen, np_t.itemsize)
             ids = qcol.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vcol.flatten().to_numpy(zero_copy_only=False)
-            x = np.ascontiguousarray(flat.reshape(n, dim_seen), dtype=np_t)
             lo = 0
             while lo < n:
                 take = min(n - lo, eff_rows - held)
@@ -215,24 +216,20 @@ def iter_query_blocks(
     acc_ids: list[np.ndarray] = []
     acc_vecs: list[np.ndarray] = []
     held = 0
-    eff_rows = MAX_QUERY_BLOCK
-    dim_global = None  # executors validate within a task; this closes the
-    # cross-partition hole (two internally-uniform partitions of different
-    # dims would otherwise surface as an unattributed concatenate error)
+    width = dim  # without a dim, each task pins its own: hold all to the first
+    eff_rows = _block_rows_for(width or 0, np_t.itemsize)
     for row in packed_df.toLocalIterator(prefetchPartitions=True):
         ids = np.frombuffer(row["ids"], dtype=np.int64)
         if not len(ids):
             continue
-        blk_dim = len(np.frombuffer(row["vecs"], dtype=np_t)) // len(ids)
-        if dim_global is None:
-            dim_global = blk_dim
-            eff_rows = _block_rows_for(blk_dim, np_t.itemsize)
-        elif blk_dim != dim_global:
-            raise ValueError(
-                "iter_query_blocks: ragged query vectors across partitions "
-                f"(dim {blk_dim} vs {dim_global})"
-            )
         vecs = np.frombuffer(row["vecs"], dtype=np_t).reshape(len(ids), -1)
+        if width is None:
+            width = vecs.shape[1]
+            eff_rows = _block_rows_for(width, np_t.itemsize)
+        elif vecs.shape[1] != width:
+            raise DimensionMismatch(
+                width, vecs.shape[1], "dimension-mismatched query vectors across partitions"
+            )
         acc_ids.append(ids)
         acc_vecs.append(vecs)
         held += len(ids)
@@ -244,17 +241,6 @@ def iter_query_blocks(
             held = len(acc_ids[0])
     if held:
         yield np.concatenate(acc_ids), np.concatenate(acc_vecs)
-
-
-def collect_queries(
-    queries_df: DataFrame, qid_col: str, vec_col: str, dtype: type = np.float32
-) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side materialization of a KNOWN-small query batch (tests and
-    single-block callers).  Production paths stream via iter_query_blocks."""
-    pdf = queries_df.select(qid_col, vec_col).toPandas()
-    qids = pdf[qid_col].to_numpy(dtype=np.int64)
-    q = np.asarray(list(pdf[vec_col]), dtype=dtype)
-    return qids, q
 
 
 def partial_topk(
@@ -273,8 +259,7 @@ def partial_topk(
 ) -> DataFrame:
     """Per-partition top-k candidates: ≤ nq*k rows per Arrow batch.
 
-    Uses ``mapInArrow`` for zero-copy vector decode: the list<float> column's
-    flattened child buffer reshapes straight into a (n, d) matrix — no
+    Uses ``mapInArrow`` for zero-copy vector decode (vectors.decode) — no
     per-row Python object materialization (which dominated runtime at the
     1M-row scale probe before this).
 
@@ -312,15 +297,8 @@ def partial_topk(
             n = rb.num_rows
             if n == 0:
                 continue
-            vec_arr = rb.column(1)
-            flat = vec_arr.flatten()
-            values = flat.to_numpy(zero_copy_only=False)
-            if len(values) == n * dim:
-                raw = values.reshape(n, dim)
-            else:  # ragged rows (bad data) — fall back to per-row conversion
-                raw = np.asarray(
-                    [np.asarray(v, dtype=dtype) for v in vec_arr.to_pylist()]
-                )
+            # corpus rows: structural checks only (NaN/Inf was the add's job)
+            raw = vectors.decode(rb.column(1), dim, dtype=None, ids=rb.column(0))
             # resolve_metric, not raw string compare: a None/aliased metric
             # that resolves to L2 must take the same 4.6-10.3x decode-free
             # kernel simjoin.py:264 gates on (ADVICE r12 consistency fix)
@@ -450,6 +428,7 @@ def exact_knn_flat(
     probe_mask_for: Optional[callable] = None,
     dtype: type = np.float32,
     sq8: Optional[tuple] = None,
+    dim: Optional[int] = None,
 ) -> DataFrame:
     """Flattened result: (qid BIGINT, rank INT, label BIGINT, distance FLOAT).
 
@@ -459,7 +438,9 @@ def exact_knn_flat(
     the corpus side only ever streams (never collected, never shuffled whole).
     """
     partials = []
-    for qids, q in iter_query_blocks(queries_df, qid_col, q_vec_col, dtype=dtype):
+    for qids, q in iter_query_blocks(
+        queries_df, qid_col, q_vec_col, dtype=dtype, dim=dim
+    ):
         full_mask = None
         if probe_mask_for is not None:
             # (block, nlist) bool mask: ≤ 64k x 2048 ~ 134 MB worst case

@@ -222,6 +222,34 @@ def test_save_load_immutable(engine, spark, vectors8, queries8, tmp_path):
         engine.add("persist", _vec_df(spark, vectors8[:5], np.arange(5)))
 
 
+def test_save_crash_leaves_previous_save_loadable(
+    engine, spark, vectors8, queries8, tmp_path, monkeypatch
+):
+    """A save that dies after writing data but before meta.json must leave
+    the earlier save at the same path whole: same count, same answers."""
+    import json
+
+    engine.create("crash", 8, "IDMap,Flat")
+    engine.add("crash", _vec_df(spark, vectors8[:100], np.arange(100)))
+    path = str(tmp_path / "crash_idx")
+    engine.save("crash", path)
+    q = _query_df(spark, queries8[:3])
+    before = sorted(engine.search_flat("crash", 3, q).collect())
+    engine.add("crash", _vec_df(spark, vectors8[100:300], np.arange(100, 300)))
+
+    def boom(*args, **kwargs):
+        raise OSError("disk full while writing meta.json")
+
+    monkeypatch.setattr(json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        engine.save("crash", path)
+    monkeypatch.undo()
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["crash_idx"]  # no temp dir left
+    engine.load("reloaded", path)
+    assert engine.registry.get("reloaded").count == 100
+    assert sorted(engine.search_flat("reloaded", 3, q).collect()) == before
+
+
 # -------------------------------------------------------------------- IVF
 
 

@@ -10,7 +10,7 @@ pin that the three probe implementations agree under adversarial
 chunkings and near-tie centroids."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from duckdb_faiss_ext_spark import FaissSparkEngine
@@ -53,11 +53,13 @@ def test_three_probe_paths_agree_under_chunking(spark, eng):
         np.testing.assert_array_equal(
             ids_fn(np.arange(hi - lo), q[lo:hi]), full_ids[lo:hi]
         )
-    # executor-side explode udf (pandas path) must agree with the driver fns
-    inner = eng._probe_clusters_udf(idx, nprobe).func
-    udf_ids = inner(pd.Series([r.tolist() for r in q]))
+    # executor-side explode udf (Arrow path) must agree with the driver fns
+    inner = eng._probe_clusters_arrow(idx, nprobe).func
+    udf_ids = inner(
+        pa.array(np.arange(len(q))), pa.array([r.tolist() for r in q], pa.list_(pa.float32()))
+    ).to_pylist()
     for i in range(len(q)):
-        assert sorted(udf_ids.iloc[i]) == sorted(full_ids[i].tolist())
+        assert sorted(udf_ids[i]) == sorted(full_ids[i].tolist())
 
 
 def test_probe_choice_stable_on_near_tie_centroids(spark, eng):
