@@ -8,7 +8,7 @@ and the vector surface is re-expressed Spark-first:
 
 - indexes are immutable data (DataFrame of (label, vector[, cluster_id]) +
   driver-side metadata), not mutable C++ objects guarded by mutexes;
-- exact search is batched numpy inside ``mapInPandas`` (Arrow), mirroring the
+- exact search is batched numpy inside ``mapInArrow``, mirroring the
   reference's chunk-at-a-time design (faiss_extension.cpp:621-666);
 - filtered search is a semi-join before top-k (README.md:245 semantics);
 - IVF training is MLlib KMeans; cluster pruning replaces nprobe traversal.

@@ -28,7 +28,7 @@ import tempfile
 import threading
 import warnings
 from contextlib import contextmanager
-from typing import Optional
+from typing import Iterable, Optional
 
 import numpy as np
 import pyarrow as pa
@@ -418,21 +418,36 @@ class FaissSparkEngine:
                 # it ON TOP of the range shuffle's files roughly doubles the
                 # transient local-disk footprint and risks re-introducing
                 # the r13 ENOSPC the encode-before-shuffle fix addressed.
-                # Above a size threshold (Catalyst plan-stat estimate;
-                # params 'layout_cache_max_bytes') skip the cache and accept
-                # the double lineage pass — at that scale the second pass is
-                # cheaper than running out of disk.  Estimates >= 2^62 mean
-                # "unknown" (Catalyst's defaultSizeInBytes sentinel) and keep
+                # Above a size threshold (params 'layout_cache_max_bytes')
+                # skip the cache and accept the double lineage pass — at
+                # that scale the second pass is cheaper than running out of
+                # disk.  The size is exact where the add knows its row count
+                # (unlabeled adds; a retrain adds the stored rows): rows x
+                # (payload + 12 B of label and cluster id), the payload being
+                # m smallint PQ codes, dim int8 SQ8 codes or dim float32.
+                # Labeled adds fall back to Catalyst's plan estimate (ADVICE
+                # r15: a coarse guess after assign/encode); estimates >= 2^62
+                # mean "unknown" (the defaultSizeInBytes sentinel) and keep
                 # the cache.
-                try:
-                    est = int(
-                        frame._jdf.queryExecution()
-                        .optimizedPlan()
-                        .stats()
-                        .sizeInBytes()
-                    )
-                except Exception:
-                    est = -1
+                if pre_count is not None:
+                    rows = pre_count + (idx.count if rebuild and idx.data is not None else 0)
+                    if idx.codebooks is not None:
+                        payload = 2 * idx.codebooks.shape[0]
+                    elif idx.sq_vdiff is not None:
+                        payload = idx.dim
+                    else:
+                        payload = 4 * idx.dim
+                    est = rows * (payload + 12)
+                else:
+                    try:
+                        est = int(
+                            frame._jdf.queryExecution()
+                            .optimizedPlan()
+                            .stats()
+                            .sizeInBytes()
+                        )
+                    except Exception:
+                        est = -1
                 cap = float(
                     idx.params.get(
                         "layout_cache_max_bytes", self.LAYOUT_CACHE_MAX_BYTES
@@ -2648,13 +2663,15 @@ class FaissSparkEngine:
     # ---------------------------------------------------------------- search
 
     # query-side row count above which searches auto-route onto the
-    # executor-side bulk plans (block equi-joins / packed query streaming)
-    # instead of the driver's block iterator.  Measured crossovers on
-    # local[32] at dim 64 (SCALE.md r4): the IVF block equi-join wins 2.1x
-    # at 300k queries and is roughly break-even near 100k; the packed graph
-    # stream crosses ~300k.  Below the threshold the driver stream's lower
-    # fixed cost wins; above it the driver becomes a serialization floor
-    # that no number of executors can lift.
+    # executor-side bulk plans (block equi-joins; graph indexes, which have
+    # none, stream executor-packed query blocks) instead of the driver
+    # route.  A side within one query block never reaches the count: the
+    # Arrow fetch that reads it routes it (_route_queries).  Measured
+    # crossovers on local[32] at dim 64 (SCALE.md r4): the IVF block
+    # equi-join wins 2.1x at 300k queries and is roughly break-even near
+    # 100k; the packed graph stream crosses ~300k.  Below the threshold the
+    # driver route's lower fixed cost wins; above it the driver becomes a
+    # serialization floor that no number of executors can lift.
     BULK_QUERY_THRESHOLD = 100_000
 
     # routing-estimate memo: analyzed-plan semanticHash -> last probed
@@ -2711,22 +2728,43 @@ class FaissSparkEngine:
             self._route_cache[plan_key] = n
         return n
 
-    def _resolve_bulk_routing(self, queries_df: DataFrame, params: dict) -> None:
+    def _route_queries(
+        self, idx: FaissIndex, queries_df: DataFrame, qid_col: str,
+        vec_col: str, params: dict,
+    ) -> "tuple[Iterable[tuple[np.ndarray, np.ndarray]], Optional[np.ndarray]]":
         """Decide (once per search) whether this search takes the
         executor-side bulk-query plan, writing the decision into
-        ``params['bulk_queries']`` for every downstream path.
+        ``params['bulk_queries']`` for every downstream path; return the
+        driver route's query blocks, and the qids of the query side when
+        the routing read it whole (else None).
 
         The reference never serializes the query side through a
         coordinator — queries arrive as DataChunks inside the host pipeline
         (faiss_extension.cpp:913-916); before r5 a user had to KNOW the
         ``bulk_queries`` knob to get the equivalent executor-side plan
         (VERDICT r4 wrong #1).  An explicit ``bulk_queries`` value (0 or 1)
-        still overrides the estimate."""
+        skips the routing.  Otherwise ONE bounded Arrow fetch of
+        ``min(threshold, block rows)`` decides: a side that fits is read
+        once and takes the driver route with no count probe; a larger one
+        is routed by ``_query_rows_estimate`` and streams packed on the
+        driver route.  The streams are lazy: bulk plans never read them."""
         if params.get("bulk_queries") is not None:
             params["bulk_queries"] = int(params["bulk_queries"])
-            return
+            return topk_ops.iter_query_blocks(
+                queries_df, qid_col, vec_col,
+                packed=bool(params["bulk_queries"]), dim=idx.dim,
+            ), None
         thr = int(params.get("bulk_query_threshold", self.BULK_QUERY_THRESHOLD))
-        n_est = self._query_rows_estimate(queries_df, thr)
+        rows = min(thr, topk_ops._block_rows_for(idx.dim, 4))  # float32
+        block = topk_ops.fetch_query_block(
+            queries_df, qid_col, vec_col, rows, dim=idx.dim
+        )
+        if block is not None:
+            n_est = len(block[0])
+        elif rows == thr:
+            n_est = thr + 1  # the fetch itself saw more than the threshold
+        else:
+            n_est = self._query_rows_estimate(queries_df, thr)
         params["bulk_queries"] = 1 if n_est > thr else 0
         logger.info(
             "bulk routing: query side ~%s rows (threshold %d) -> %s",
@@ -2734,6 +2772,11 @@ class FaissSparkEngine:
             thr,
             "executor-side bulk plan" if params["bulk_queries"] else "driver block stream",
         )
+        if block is not None:
+            return [block], block[0]
+        return topk_ops.iter_query_blocks(
+            queries_df, qid_col, vec_col, packed=True, dim=idx.dim
+        ), None
 
     @staticmethod
     def _coarse_scores(q: np.ndarray, cents: np.ndarray, metric: str, marg: float) -> np.ndarray:
@@ -2795,6 +2838,23 @@ class FaissSparkEngine:
     ) -> DataFrame:
         """Flattened search result (qid, rank, label, distance) — the engine's
         native shape; `search` wraps it into the reference's LIST(STRUCT)."""
+        return self._search_flat(
+            name, k, queries_df, params, qid_col, vec_col, allowed_df
+        )[0]
+
+    def _search_flat(
+        self,
+        name: str,
+        k: int,
+        queries_df: DataFrame,
+        params: Optional[dict],
+        qid_col: str,
+        vec_col: str,
+        allowed_df: Optional[DataFrame] = None,
+    ) -> "tuple[DataFrame, Optional[np.ndarray]]":
+        """``search_flat``, and the qids of the query side when the routing
+        fetch read it whole (None otherwise) — the list APIs pad from them
+        instead of scanning ``queries_df`` again."""
         idx = self.registry.get(name)
         if idx.data is None:
             raise FaissSparkError(f"Index {name} is empty; add vectors first")
@@ -2829,7 +2889,9 @@ class FaissSparkEngine:
                 "to beam (Flat/IVF index, or graphs not built). Use "
                 "'auto'/'scan', or a graph factory."
             )
-        self._resolve_bulk_routing(queries_df, params)
+        blocks, fetched_qids = self._route_queries(
+            idx, queries_df, qid_col, vec_col, params
+        )
         allowed_col = None
         if allowed_df is not None:
             # filter-during-search semantics: semi-join BEFORE top-k
@@ -2901,13 +2963,12 @@ class FaissSparkEngine:
                     has_graph = False
         if idx.codebooks is not None:
             return self._pq_search_flat(
-                idx, k, queries_df, params, qid_col, vec_col, corpus
-            )
+                idx, k, queries_df, params, qid_col, vec_col, corpus, blocks
+            ), fetched_qids
         if has_graph:
             return self._nsw_search_flat(
-                idx, k, queries_df, params, qid_col, vec_col, corpus,
-                allowed_col=allowed_col,
-            )
+                idx, k, params, corpus, blocks, allowed_col=allowed_col
+            ), fetched_qids
         cluster_col = None
         probe_fn = None
         if idx.spec.kind == "ivf" and "cluster_id" in corpus.columns:
@@ -2951,7 +3012,7 @@ class FaissSparkEngine:
                     bulk=True,  # bulk_queries = caller says it's big
                     right_sq8=sq8_params,
                     dim=idx.dim,
-                ).select("qid", "rank", F.col("label"), F.col("distance"))
+                ).select("qid", "rank", F.col("label"), F.col("distance")), None
             probes = self._probe_clusters_arrow(idx, int(params.get("nprobe", 1)))
             q = q.withColumn("cluster_id", F.explode(probes("qid", "vector")))
             return similarity_join_grouped(
@@ -2966,7 +3027,7 @@ class FaissSparkEngine:
                 metric_arg=idx.metric_arg,
                 right_sq8=sq8_params,
                 dim=idx.dim,
-            ).select("qid", "rank", F.col("label"), F.col("distance"))
+            ).select("qid", "rank", F.col("label"), F.col("distance")), None
         return topk_ops.exact_knn_flat(
             corpus,
             queries_df,
@@ -2979,8 +3040,8 @@ class FaissSparkEngine:
             cluster_col=cluster_col,
             probe_mask_for=probe_fn,
             sq8=sq8_params,
-            dim=idx.dim,
-        )
+            query_blocks=blocks,
+        ), fetched_qids
 
     # broadcast cap for the residual-ADC per-(query, probed cluster) lookup
     # tables; the query block sub-chunks to stay under it
@@ -2995,11 +3056,13 @@ class FaissSparkEngine:
         qid_col: str,
         vec_col: str,
         corpus: DataFrame,
+        blocks: "Iterable[tuple[np.ndarray, np.ndarray]]",
     ) -> DataFrame:
         """ADC search over PQ codes, composed with IVF cluster pruning.
 
-        Query side streams in bounded blocks (same contract as the exact
-        kernel); per chunk the probed-cluster union becomes a JVM IN-filter on
+        Query side arrives as the routing's bounded blocks (same contract
+        as the exact kernel; ``queries_df`` feeds only the bulk plan); per
+        chunk the probed-cluster union becomes a JVM IN-filter on
         ``cluster_id`` — on cluster-partitioned storage that is directory/
         row-group pruning, so a chunk only scans the codes its queries probe.
         SCORING is per-query (r4): each query's lookup tables cover exactly
@@ -3060,9 +3123,7 @@ class FaissSparkEngine:
             per_q = max(1, min(nprobe, idx.spec.nlist)) * m_ * nk_ * 4
             chunk = max(1, min(chunk, self.PQ_LUT_BUDGET_BYTES // per_q))
         partials = []
-        for qids, q in topk_ops.iter_query_blocks(
-            queries_df, qid_col, vec_col, dim=idx.dim
-        ):
+        for qids, q in blocks:
             for lo in range(0, len(qids), chunk):
                 cqids = qids[lo : lo + chunk]
                 cq = q[lo : lo + chunk]
@@ -3070,8 +3131,9 @@ class FaissSparkEngine:
                 probes = None
                 if probe_ids_fn is not None:
                     probes = probe_ids_fn(cqids, cq)
-                    probed = [int(c) for c in np.unique(probes)]
-                    codes = corpus.filter(F.col("cluster_id").isin(probed))
+                    codes = corpus.filter(
+                        topk_ops.in_ids("cluster_id", np.unique(probes))
+                    )
                 partials.append(
                     pq_search_arrays(
                         codes,
@@ -3149,11 +3211,9 @@ class FaissSparkEngine:
         self,
         idx: FaissIndex,
         k: int,
-        queries_df: DataFrame,
         params: dict,
-        qid_col: str,
-        vec_col: str,
         corpus: DataFrame,
+        blocks: "Iterable[tuple[np.ndarray, np.ndarray]]",
         allowed_col: Optional[str] = None,
     ) -> DataFrame:
         """Graph-ANN search (operators/nsw.py): beam per graph segment,
@@ -3178,12 +3238,9 @@ class FaissSparkEngine:
         partials = []
         # graph indexes have no executor-side block-join bulk path (segment
         # replication would cost the BNL's full shuffle while beams only
-        # save compute) — bulk_queries instead upgrades the driver stream to
-        # executor-packed binary blocks (2.3x at 1M query rows, topk.py)
-        for qids, q in topk_ops.iter_query_blocks(
-            queries_df, qid_col, vec_col,
-            packed=bool(params.get("bulk_queries")), dim=idx.dim,
-        ):
+        # save compute) — bulk_queries instead means the routing's blocks
+        # come from executor-packed binary blocks (2.3x at 1M query rows)
+        for qids, q in blocks:
             for lo in range(0, len(qids), topk_ops.MAX_QUERY_BATCH):
                 cqids = qids[lo : lo + topk_ops.MAX_QUERY_BATCH]
                 cq = q[lo : lo + topk_ops.MAX_QUERY_BATCH]
@@ -3191,8 +3248,9 @@ class FaissSparkEngine:
                 probes = None
                 if probe_ids_fn is not None:
                     probes = probe_ids_fn(cqids, cq)
-                    probed = [int(c) for c in np.unique(probes)]
-                    data = corpus.filter(F.col("cluster_id").isin(probed))
+                    data = corpus.filter(
+                        topk_ops.in_ids("cluster_id", np.unique(probes))
+                    )
                 partials.append(
                     nsw_topk(
                         data,
@@ -3246,15 +3304,25 @@ class FaissSparkEngine:
         return lambda qids, q: self._coarse_topk(q, cents, metric, marg, nprobe, desc)
 
     def _pad_no_hit_queries(
-        self, queries_df: DataFrame, lists: DataFrame, k: int, metric: str, qid_col: str
+        self, queries_df: DataFrame, lists: DataFrame, k: int, metric: str,
+        qid_col: str, qids: Optional[np.ndarray] = None,
     ) -> DataFrame:
         """Left-join results back to the query set and pad queries with ZERO
         hits to a full k-length list of label=-1 entries — the reference
         contract is that the result list length is always k (README.md:220,
-        :243/:269), including when a filter eliminated every row."""
-        out = queries_df.select(qid_col).join(
-            lists.withColumnRenamed("qid", qid_col), qid_col, "left"
-        )
+        :243/:269), including when a filter eliminated every row.
+
+        ``qids``: the query side's ids when the routing fetch read it whole;
+        the query set is then a local relation of them (no second scan of
+        ``queries_df``), cast to the query side's qid type."""
+        if qids is None:
+            base = queries_df.select(qid_col)
+        else:
+            qtype = queries_df.schema[qid_col].dataType
+            base = self.spark.createDataFrame(
+                pa.table({qid_col: pa.array(qids, pa.int64())})
+            ).select(F.col(qid_col).cast(qtype))
+        out = base.join(lists.withColumnRenamed("qid", qid_col), qid_col, "left")
         pad_dist = float("-inf") if topk_ops.is_descending(metric) else float("inf")
         empty = F.transform(
             F.sequence(F.lit(0), F.lit(k - 1)),
@@ -3278,9 +3346,9 @@ class FaissSparkEngine:
         """faiss_search (:903-925): returns (qid, result LIST(STRUCT(rank,
         label, distance))), list length always k, -1 padded (README.md:220)."""
         idx = self.registry.get(name)
-        flat = self.search_flat(name, k, queries_df, params, qid_col, vec_col)
+        flat, qids = self._search_flat(name, k, queries_df, params, qid_col, vec_col)
         lists = topk_ops.assemble_lists(flat, k, idx.metric)
-        return self._pad_no_hit_queries(queries_df, lists, k, idx.metric, qid_col)
+        return self._pad_no_hit_queries(queries_df, lists, k, idx.metric, qid_col, qids)
 
     def warm(self, name: str, k: int = 1) -> float:
         """First-query warm affordance (VERDICT r9 task 4): the first search
@@ -3382,12 +3450,12 @@ class FaissSparkEngine:
         allowed = self.spark.sql(
             f"SELECT {idsel} FROM {table} WHERE CAST(({filter_expr}) AS BOOLEAN)"
         )
-        flat = self.search_flat(
+        flat, qids = self._search_flat(
             name, k, queries_df, params, qid_col, vec_col, allowed_df=allowed
         )
         idx = self.registry.get(name)
         lists = topk_ops.assemble_lists(flat, k, idx.metric)
-        return self._pad_no_hit_queries(queries_df, lists, k, idx.metric, qid_col)
+        return self._pad_no_hit_queries(queries_df, lists, k, idx.metric, qid_col, qids)
 
     # faiss_search_filter_set (:974-1022) — same semantics, same plan.
     search_filter_set = search_filter

@@ -12,7 +12,7 @@ FAISS conventions the engine must reproduce (SURVEY.md §1.3):
 Kernels take ``Q`` (nq, d) and ``X`` (n, d) float32 arrays and return an
 (nq, n) score matrix.  Pairwise metrics that cannot be expressed as a matmul
 are computed with broadcasting; chunk the corpus axis upstream if n*d is big
-(the engine's mapInPandas path feeds Arrow-batch-sized ``X``).
+(the engine's mapInArrow path feeds Arrow-batch-sized ``X``).
 """
 
 from __future__ import annotations
